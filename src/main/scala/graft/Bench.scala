@@ -636,16 +636,7 @@ object Bench {
     * mode (emitTotal=false, single query) prints a per-query result line;
     * in inproc mode prints the aggregate line. */
   private def runInProc(names: Seq[String], emitTotal: Boolean): Unit = {
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Graft.registerAll(spark)
+    val spark = Graft.localSession("bench", cpus.toInt, cpus.toInt)
     // FAST mode (parent deadline fallback): one timed run per query,
     // no untimed warmup — 3× fewer executions. The observation includes
     // codegen/JIT, i.e. an honest overestimate of steady-state cost.
@@ -773,31 +764,45 @@ object Bench {
     * line — additions only, both neighbours stay byte-identical.
     * Entries are ordered cheapest-first so the LAST chunks (the ones a
     * bare character-tail capture is most likely to retain whole) carry
-    * the heaviest queries — the numbers a reader weighs most. */
+    * the heaviest queries — the numbers a reader weighs most.
+    *
+    * Every chunk is at most `limit` bytes. The header is budgeted at
+    * the digit width of the chunk count it ends up with (regrouped at
+    * one more digit when the count outgrows the guess). An entry too
+    * long to fit any chunk on its own is left out of the chunks; the
+    * full artifact line still carries it. */
   private[graft] def perQueryPartLines(results: Seq[(String, Double)],
       sfBase: String, limit: Int = 1800): Seq[String] = {
-    if (results.isEmpty) Nil
-    else {
-      def header(i: Int, n: Int): String =
-        s"""{"metric":"per_query_part","i":$i,"n":$n,"unit":"sec","sf":"$sfBase","queries":{"""
-      // worst-case header width (2-digit i/n) + closing "}}"
-      val overhead = header(99, 99).length + 2
-      val entries = results.sortBy { case (n, v) => (v, n) }
-        .map { case (n, v) => s"${jstr(n)}:${fmt3(v)}" }
-      val groups = scala.collection.mutable.ArrayBuffer(
-        scala.collection.mutable.ArrayBuffer[String]())
-      var len = overhead
-      entries.foreach { e =>
-        if (groups.last.nonEmpty && len + e.length + 1 > limit) {
+    def header(i: Int, n: Int): String =
+      s"""{"metric":"per_query_part","i":$i,"n":$n,"unit":"sec","sf":"$sfBase","queries":{"""
+    val entries = results.sortBy { case (n, v) => (v, n) }
+      .map { case (n, v) => s"${jstr(n)}:${fmt3(v)}" }
+    // chunks when i/n take at most `digits` digits; the header overhead
+    // is the widest such header plus the closing "}}"
+    def group(digits: Int): Seq[Seq[String]] = {
+      val widest = math.pow(10, digits).toInt - 1
+      val room = limit - (header(widest, widest).length + 2)
+      val groups = scala.collection.mutable.ArrayBuffer[
+        scala.collection.mutable.ArrayBuffer[String]]()
+      var len = 0
+      entries.filter(_.length <= room).foreach { e =>
+        if (groups.isEmpty || len + e.length > room) {
           groups += scala.collection.mutable.ArrayBuffer[String]()
-          len = overhead
+          len = 0
         }
         groups.last += e
         len += e.length + 1
       }
-      groups.zipWithIndex.map { case (g, i) =>
-        header(i, groups.size) + g.mkString(",") + "}}"
-      }.toSeq
+      groups.map(_.toSeq).toSeq
+    }
+    var digits = 1
+    var groups = group(digits)
+    while (groups.size.toString.length > digits) {
+      digits += 1
+      groups = group(digits)
+    }
+    groups.zipWithIndex.map { case (g, i) =>
+      header(i, groups.size) + g.mkString(",") + "}}"
     }
   }
 

@@ -14,27 +14,54 @@ import graft.operators.Retention
   */
 object Graft {
 
+  /** Generated-class cache size set by [[localSession]]. One `uba_sweep`
+    * pass (14 UBA queries) generates ~200 whole-stage classes and one
+    * curation pass ~160, against Spark's default of 100 entries: every
+    * warm pass evicted and Janino-recompiled all of them, and the JIT
+    * then compiled the fresh classes again. At 2000 entries a warm pass
+    * compiles nothing instead of ~197 (uba_sweep) and ~155 (curation)
+    * classes; a resident class costs roughly 30 KB of heap.
+    *
+    * The cache is keyed on the generated source, which by default names
+    * each class after its whole-stage codegen stage id. AQE numbers
+    * stages in the order they are planned, which follows which earlier
+    * stage finished first, so an unchanged plan could come back with
+    * permuted ids and miss the cache (0–10 recompiles per warm
+    * `uba_sweep` pass). [[localSession]] therefore also turns
+    * `spark.sql.codegen.useIdInClassName` off. */
+  private[graft] val CodegenCacheEntries = 2000
+
   /** Builds a local session tuned for this machine. On a real cluster the
     * caller owns the builder and only needs [[registerAll]].
+    *
+    * `spark.sql.codegen.cache.maxEntries` is a static conf and the cache
+    * behind it is JVM-global: it is sized once, by the first session in
+    * the JVM that generates code. A session built here after another
+    * one has already compiled a query keeps that earlier size. Callers
+    * that build their own session should set it themselves (README,
+    * "Session setup").
     */
   def localSession(
       appName: String = "graft",
       cores: Int = Runtime.getRuntime.availableProcessors(),
       shufflePartitions: Int = 32): SparkSession = {
-    val spark = SparkSession
-      .builder()
-      .master(s"local[$cores]")
-      .appName(appName)
-      .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val builder = SparkSession.builder().master(s"local[$cores]").appName(appName)
+    sessionConfs(shufflePartitions).foreach { case (k, v) => builder.config(k, v) }
+    val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     registerAll(spark)
     spark
   }
+
+  /** The confs [[localSession]] sets besides master and app name. */
+  private[graft] def sessionConfs(shufflePartitions: Int): Seq[(String, String)] = Seq(
+    "spark.sql.shuffle.partitions" -> shufflePartitions.toString,
+    "spark.sql.adaptive.enabled" -> "true",
+    "spark.sql.session.timeZone" -> "UTC",
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+    "spark.sql.codegen.cache.maxEntries" -> CodegenCacheEntries.toString,
+    "spark.sql.codegen.useIdInClassName" -> "false",
+    "spark.ui.enabled" -> "false")
 
   /** Registers every SQL-callable function the library provides. */
   def registerAll(spark: SparkSession): Unit = {

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Dedup, Multimodal}
@@ -76,15 +76,10 @@ object MediaScaleGen {
     val outDir = args(0)
     val nContents = args(1).toLong
     val px = if (args.length > 2) args(2).toInt else 2
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = Graft.localSession("media-scale-gen", cpus, cpus)
     import spark.implicits._
-    spark.range(0, nContents, 1, cpus.toInt)
+    spark.range(0, nContents, 1, cpus)
       .flatMap { c =>
         Seq((2 * c, MediaScaleGen.renderContent(c, "png", px)),
           (2 * c + 1, MediaScaleGen.renderContent(c, "bmp", px)))
@@ -130,15 +125,10 @@ object AudioScaleGen {
   def main(args: Array[String]): Unit = {
     val outDir = args(0)
     val nContents = args(1).toLong
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = Graft.localSession("audio-scale-gen", cpus, cpus)
     import spark.implicits._
-    spark.range(0, nContents, 1, cpus.toInt)
+    spark.range(0, nContents, 1, cpus)
       .flatMap { c =>
         Seq((2 * c, AudioScaleGen.renderClip(c, 16)),
           (2 * c + 1, AudioScaleGen.renderClip(c, 8)))
@@ -178,14 +168,9 @@ object MediaScaleBench {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
     val variant = args(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.autoBroadcastJoinThreshold", "10m")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = Graft.localSession("media-scale-bench", cpus, cpus)
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10m")
     val media = spark.read.parquet(s"$dir/media.parquet")
     val nimg = media.count()
 

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale-rehearsal data generator: blows a testdata directory up N× by
@@ -37,18 +37,11 @@ object ScaleGen {
     val inDir = args(0)
     val outDir = args(1)
     val copies = if (args.length > 2) args(2).toInt else 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = Graft.localSession("scale-gen", cpus, cpus)
 
     def write(df: DataFrame, name: String): Unit =
-      df.repartition(cpus.toInt).write.mode("overwrite")
+      df.repartition(cpus).write.mode("overwrite")
         .parquet(s"$outDir/$name.parquet")
 
     for (t <- Seq("region", "nation"))

@@ -96,17 +96,27 @@ case class Fingerprint64(child: Expression, k: Int) extends UnaryExpression {
 
   override def nullSafeEval(v: Any): Any = compute(v.asInstanceOf[UTF8String])
 
+  /** Grams step by CODE POINT, as Spark's `length`/`substr` (and the
+    * DuckDB oracle) count them: a UTF-16 surrogate pair is one char of
+    * the gram, never split across two. */
   def compute(s: UTF8String): Long = {
     val norm = HashedShingles.normalize(s.toString)
     val md = MessageDigest.getInstance("MD5")
-    val nGrams = math.max(norm.length - (k - 1), 1)
+    val nPoints = norm.codePointCount(0, norm.length)
+    val nGrams = math.max(nPoints - (k - 1), 1)
     var minHash = Long.MaxValue
+    // [from, to): UTF-16 bounds of the current k-code-point gram
+    var from = 0
+    var to = norm.offsetByCodePoints(0, math.min(k, nPoints))
     var i = 0
     while (i < nGrams) {
-      val gram = norm.substring(i, math.min(i + k, norm.length))
-      val h = HashedShingles.hash60(md, gram)
+      val h = HashedShingles.hash60(md, norm.substring(from, to))
       if (h < minHash) minHash = h
       i += 1
+      if (i < nGrams) {
+        from += Character.charCount(norm.codePointAt(from))
+        to += Character.charCount(norm.codePointAt(to))
+      }
     }
     minHash
   }

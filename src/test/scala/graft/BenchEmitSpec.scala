@@ -188,6 +188,35 @@ class BenchEmitSpec extends AnyFunSuite {
     }
   }
 
+  test("per_query_part headers are budgeted at the real i/n digit width") {
+    // 150 one-entry chunks need 3-digit i/n: at limit 89 a 2-digit budget
+    // would emit 90-byte lines, so no chunk fits and none is emitted; from
+    // limit 90 every query fits, one chunk or more each
+    val rs = (1 to 150).map(i => (f"q$i%03d", 1.0))
+    assert(Bench.perQueryPartLines(rs, "sf0.1", limit = 89).isEmpty)
+    for (limit <- 90 to 130) {
+      val lines = Bench.perQueryPartLines(rs, "sf0.1", limit)
+      lines.foreach(l => assert(l.length <= limit, s"limit $limit, len ${l.length}: $l"))
+      assert(lines.zipWithIndex.forall { case (l, i) =>
+        l.startsWith(s"""{"metric":"per_query_part","i":$i,"n":${lines.size},""")
+      })
+      assert(lines.flatMap(""""(q\d+)":""".r.findAllMatchIn(_).map(_.group(1))) ===
+        rs.map(_._1), s"limit $limit")
+    }
+    assert(Bench.perQueryPartLines(rs, "sf0.1", limit = 90).size === 150)
+  }
+
+  test("per_query_part leaves out an entry too long for any chunk") {
+    val huge = s"q0_${"x" * 2000}" -> 1.0
+    val rs = synth(257)
+    val lines = Bench.perQueryPartLines(rs :+ huge, "sf0.1")
+    lines.foreach(l => assert(l.length <= 1800, s"len ${l.length}"))
+    assert(!lines.exists(_.contains(huge._1)))
+    assert(lines.flatMap(""""(q\d+_synthetic_name_\d+)":""".r.findAllMatchIn(_)
+      .map(_.group(1))).toSet === rs.map(_._1).toSet)
+    assert(Bench.perQueryPartLines(Seq(huge), "sf0.1").isEmpty)
+  }
+
   test("prior-round isolated floors resolve by unique prefix") {
     // a1's ratcheted floor is the judge's 0.14 s isolated re-run, below
     // any rehearsal number — the floor only ever steps down

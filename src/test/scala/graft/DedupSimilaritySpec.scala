@@ -204,9 +204,18 @@ class DedupSimilaritySpec extends AnyFunSuite {
 
   test("native simhash32 and fingerprint64 equal the composable forms") {
     import graft.functions.Text
+    import spark.implicits._
     val real = SparkEntry.tbl(spark, TestData.dir("0.001"), "documents")
       .select(col("doc_id"), col("text")).limit(100)
-    for (d <- Seq(docs, real)) {
+    // astral-plane text: Spark's length/substr count code points, so a
+    // surrogate pair is one gram char (shorter-than-k and mixed rows too)
+    val emoji = "\uD83D\uDE00"
+    val astral = Seq(
+      (1L, emoji * 9), (2L, emoji * 3), (3L, s"hello $emoji world $emoji$emoji again"),
+      (4L, s"a${emoji}b${emoji}c${emoji}d${emoji}e${emoji}f"),
+      (5L, "\uD835\uDD18\uD835\uDD2B\uD835\uDD26 math letters, \u00e9t\u00e9 and ascii"))
+      .toDF("doc_id", "text")
+    for (d <- Seq(docs, real, astral)) {
       val both = d.select(
         Dedup.simhash32(col("text")).as("sa"),
         Dedup.simhash32Native(col("text")).as("sb"),
@@ -218,6 +227,10 @@ class DedupSimilaritySpec extends AnyFunSuite {
         col("qa") =!= col("qb")).count() === 0)
       assert(both.count() > 0)
     }
+    // nine U+1F600: the declarative form's value, which the UTF-16
+    // stepping once missed
+    assert(astral.where(col("doc_id") === 1L)
+      .select(Text.fingerprint64Native(col("text"))).as[Long].head() === 674617188111860583L)
   }
 
   test("native minhash_sig equals the composable signature") {
@@ -312,6 +325,27 @@ class DedupSimilaritySpec extends AnyFunSuite {
     val rs = Dedup.connectedComponentsStar(pairs).collect()
       .map(x => x.getLong(0) -> x.getLong(1)).toMap
     assert(rs === r)
+  }
+
+  test("connected components NULL ids: a (NULL, x) pair is x's self-loop") {
+    import spark.implicits._
+    // least/greatest skip NULL, so (NULL, 5) canonicalizes to (5, 5) and
+    // 5 is its own group; (2, NULL) adds nothing to 2's component; the
+    // NULL id itself never reaches the output
+    val pairs = Seq[(Option[Long], Option[Long])](
+      (None, Some(5L)), (Some(1L), Some(2L)), (Some(2L), None), (None, Some(1L)))
+      .toDF("id_a", "id_b")
+    val r = Dedup.connectedComponents(pairs).collect()
+    assert(r.forall(x => !x.isNullAt(0) && !x.isNullAt(1)))
+    assert(r.map(x => x.getLong(0) -> x.getLong(1)).toMap ===
+      Map(1L -> 1L, 2L -> 1L, 5L -> 5L))
+    // a both-NULL pair is the one way a NULL id comes out
+    val nn = Dedup.connectedComponents(
+      pairs.union(Seq[(Option[Long], Option[Long])]((None, None)).toDF("id_a", "id_b")))
+      .collect()
+    assert(nn.count(x => x.isNullAt(0) || x.isNullAt(1)) === 1)
+    assert(nn.filter(_.isNullAt(0)).forall(_.isNullAt(1)))
+    assert(nn.length === r.length + 1)
   }
 
   test("large-star/small-star collapses a path graph in O(log n) rounds") {
